@@ -19,7 +19,8 @@ final case class GraftParams(
     stemBareTerms: Boolean = false,
     topK: Int = 100,
     /** operand-size ceiling for the driver-side boolean algebra; above it
-      * the engine falls back to the fully distributed algebra */
+      * `topKAuto` falls back to the dense one-shuffle evaluator
+      * (`SparkSearchEngine.topKDense`) */
     driverAlgebraMaxDocs: Int = 2000000,
     /** minimum Σ df of a phrase's queried stems — the docId-shuffle size
       * the head-stem Bloom prefilter could save — for the prefilter to

@@ -13,20 +13,20 @@ import graft.text.TextPipeline
   *
   * The reference loads the whole index into driver memory and scores dense
   * per-corpus vectors (/root/reference/source/BM25Ranker.cpp:26-30,311-319).
-  * Here a score vector is a sparse (docId, score) DataFrame plus the score
-  * every absent doc implicitly holds (`default`) — an exact, lazy encoding
-  * of the dense algebra: NOT flips the default to 1−d instead of
-  * materializing 10^12 rows; only the final top-k pass densifies, and only
-  * when the default can still reach the result set.
+  * Here a score vector is sparse — the docs an operand touches plus the
+  * score every absent doc implicitly holds (its `default`) — an exact
+  * encoding of the dense algebra: NOT flips the default to 1−d instead of
+  * materializing 10^12 rows, and the top-k densifies against the doc
+  * dictionary only when the default can still reach the result set.
   *
-  * Everything stays one lazy Catalyst plan until top-k: per-term df and the
-  * max-normalization constants are broadcast 1-row aggregates
-  * (crossJoin(broadcast(agg))) instead of driver actions, so a term query
-  * is a single job over a term-pruned scan of the (term, docId)-sorted
-  * postings table — parquet min/max on `term` makes that a near-point read.
-  * No UDF in the scoring path. The only eager case is re-normalizing a
-  * vector whose absent-doc default is nonzero (i.e. under NOT), where the
-  * new default is data-dependent.
+  * `topKAuto` routes each query along the cheapest of three exact paths,
+  * bit-identical to each other and equal to `RefOracle` (EngineSpec):
+  *   - a single bare term → block-max WAND over the compressed blocks
+  *     (`termTopKWand`);
+  *   - operands up to `driverAlgebraMaxDocs` docs → one term-pruned
+  *     distributed fetch per atom + the scalar algebra on the driver
+  *     (`topKDriver`);
+  *   - anything larger → the dense one-shuffle evaluator (`topKDense`).
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -93,12 +93,6 @@ final class SparkSearchEngine(
       .groupBy($"term").agg(sum($"delta").as("d"))
       .as[(String, Long)].collect().toMap
 
-  /** sparse frame (docId: Long, score: Double) + implicit default score */
-  final case class Scores(df: DataFrame, default: Double)
-
-  private def emptyFrame: DataFrame =
-    spark.emptyDataset[(Long, Double)].toDF("docId", "score")
-
   /** The df-only BM25 factor (Catalyst log = StrictMath.log, matching the
     * oracle and the WAND path). Strictly positive for every df ≤ N. */
   private def idfCol(dfCount: Column): Column = {
@@ -114,46 +108,20 @@ final class SparkSearchEngine(
     (tfD * lit(params.k1 + 1)) / (tfD + lit(params.k1) * docNorm)
   }
 
-  /** BM25 with df as a column — identical operation order to the oracle
-    * (BM25Ranker.cpp:431-437) so scores are bit-identical, not just close. */
-  private def bm25Col(tf: Column, dl: Column, dfCount: Column): Column =
-    idfCol(dfCount) * tfPartCol(tf, dl)
-
-  /** Lazy max-normalize: max over the conceptually-dense vector as a
-    * broadcast scalar aggregate. The default only competes when some doc
-    * is absent from the sparse frame. Falls back to one eager aggregate
-    * when the (rare, NOT-produced) nonzero default must itself rescale. */
-  private def maxNormalize(s: Scores): Scores = {
-    if (s.default == 0.0) {
-      val m = s.df.agg(max($"score").as("mx"), count(lit(1)).as("cnt"))
-      val trueMax = when($"cnt" >= lit(stats.total_docs), coalesce($"mx", lit(0.0)))
-        .otherwise(greatest(coalesce($"mx", lit(0.0)), lit(0.0)))
-      val norm = s.df.crossJoin(broadcast(m))
-        .select($"docId",
-          when(trueMax > 0, $"score" / trueMax).otherwise($"score").as("score"))
-      Scores(norm, 0.0)
-    } else {
-      val (mx, cnt) = s.df.agg(max($"score"), count(lit(1))).as[(Option[Double], Long)].head()
-      val sparseMax = mx.getOrElse(0.0)
-      val trueMax = if (cnt >= stats.total_docs) sparseMax else math.max(sparseMax, s.default)
-      if (trueMax > 0)
-        Scores(s.df.select($"docId", ($"score" / lit(trueMax)).as("score")), s.default / trueMax)
-      else s
-    }
-  }
-
-  /** Frames cached by algebra evaluation, released once a top-k
-    * materializes — without this a long-lived session leaks cached frames
-    * until LRU eviction. The engine is single-query-at-a-time (like the
-    * reference's server); concurrent evaluations would release each
-    * other's caches early (correct, just slower). */
+  /** Frames cached by bulk evaluation (the phrase fold of `searchMany`
+    * and `searchManyAuto`), released once the result is collected —
+    * without this a long-lived session leaks cached frames until LRU
+    * eviction. The engine is single-query-at-a-time (like the reference's
+    * server); concurrent evaluations would release each other's caches
+    * early (correct, just slower). */
   private val liveCaches = new scala.collection.mutable.ArrayBuffer[DataFrame]
   private def track(df: DataFrame): DataFrame =
     liveCaches.synchronized { liveCaches += df; df }
 
   /** Unpersist every frame cached by evaluation since the last release.
-    * Called by topK/search after collecting; safe to call any time (held
-    * Scores recompute lazily if re-used). */
+    * Called by `searchManyAuto` and by `searchMany` callers after
+    * collecting; safe to call any time (a held frame recomputes lazily if
+    * re-used). */
   def releaseCaches(): Unit = liveCaches.synchronized {
     liveCaches.foreach(_.unpersist(false)); liveCaches.clear()
   }
@@ -196,85 +164,13 @@ final class SparkSearchEngine(
     }
   }
 
-  object Algebra extends ScoreAlgebra[Scores] {
-    /** Every op output is cached: the evaluator reuses operands in several
-      * branches (stackCombine feeds each stack element into both the Σ and
-      * the min chain; normalize reads its input twice — aggregate + body),
-      * and without materialization the nested plans re-evaluate
-      * exponentially. This is the sparse analogue of the reference
-      * materializing every op as a dense map (BM25Ranker.cpp:241-300);
-      * frames are query-sized and released after top-k (see liveCaches). */
-    private def cached(s: Scores): Scores = Scores(track(s.df.cache()), s.default)
-
-    override def empty: Scores = Scores(emptyFrame, 0.0)
-
-    override def termScore(rawTerm: String): Scores = {
-      val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
-      val rows = postings.filter($"term" === key)
-      val dfAgg = rows.agg(count(lit(1)).cast("double").as("df_count"))
-      val scored = rows.crossJoin(broadcast(dfAgg))
-        .select($"docId", bm25Col($"tf", $"doc_len", $"df_count").as("score"))
-      cached(maxNormalize(Scores(scored, 0.0)))
-    }
-
-    override def phraseScore(phraseText: String): Scores = {
-      val stems = TextPipeline.tokenizeQuery(phraseText)
-      if (stems.isEmpty) return empty
-      val base = postings.filter($"term".isin(stems.distinct: _*))
-      val rows = headDocFilter(Seq(stems.head), stems).fold(base)(base.filter)
-        .select($"docId", $"doc_len", $"term", $"positions_vb")
-      // one shuffle on docId (alone — so downstream docId joins can reuse
-      // the partitioning); the positional fold is doc-local. Cached because
-      // both the df-count aggregate and the scores read it.
-      val perDoc = rows
-        .groupBy($"docId")
-        .agg(first($"doc_len").as("doc_len"), // constant per doc
-          collect_list(struct($"term", $"positions_vb")).as("tp"))
-        .as[(Long, Int, Seq[(String, Array[Byte])])]
-      val tfs = perDoc.map { case (docId, dl, tp) =>
-        val termPos = tp.iterator.map { case (t, vb) =>
-          t -> graft.codec.VarByte.decodePositions(vb).toSeq
-        }.toMap
-        (docId, dl, PhraseMatch.phraseTf(stems, termPos))
-      }.filter(_._3 > 0).toDF("docId", "doc_len", "tf")
-      val tfsC = track(tfs.cache())
-      val dfAgg = tfsC.agg(count(lit(1)).cast("double").as("df_count"))
-      val scored = tfsC.crossJoin(broadcast(dfAgg))
-        .select($"docId", bm25Col($"tf", $"doc_len", $"df_count").as("score"))
-      cached(maxNormalize(Scores(scored, 0.0)))
-    }
-
-    override def not(a: Scores): Scores =
-      cached(Scores(a.df.select($"docId", (lit(1.0) - $"score").as("score")), 1.0 - a.default))
-
-    private def combine(a: Scores, b: Scores, f: (Column, Column) => Column, d: Double): Scores = {
-      val l = a.df.select($"docId", $"score".as("s1"))
-      val r = b.df.select($"docId", $"score".as("s2"))
-      val j = l.join(r, Seq("docId"), "full_outer").select($"docId",
-        f(coalesce($"s1", lit(a.default)), coalesce($"s2", lit(b.default))).as("score"))
-      cached(Scores(j, d))
-    }
-
-    override def and(a: Scores, b: Scores): Scores =
-      combine(a, b, least(_, _), math.min(a.default, b.default))
-    override def or(a: Scores, b: Scores): Scores =
-      combine(a, b, greatest(_, _), math.max(a.default, b.default))
-    override def add(a: Scores, b: Scores, wa: Double, wb: Double): Scores =
-      combine(a, b, (x, y) => lit(wa) * x + lit(wb) * y, wa * a.default + wb * b.default)
-    override def normalize(a: Scores): Scores = cached(maxNormalize(a))
-  }
-
-  /** Evaluate a query to its (still lazy/sparse) score vector. */
-  def scores(query: String): Scores =
-    QueryEvaluator.evaluate(query, Algebra, params)
-
   /** Driver-side algebra over sparse (map, default) vectors — operand
     * FETCH is a distributed term-pruned scan + fold (that's where 10^12
     * docs matter), but once an operand fits on the driver the boolean
     * algebra is pure arithmetic; paying a Spark stage per min/max would be
     * all scheduling overhead. Bails out (TooBig) when any operand exceeds
-    * `params.driverAlgebraMaxDocs`, falling back to the distributed
-    * algebra. Identical operation order → bit-identical scores (tested).
+    * `params.driverAlgebraMaxDocs`, falling back to `topKDense`.
+    * Identical operation order → bit-identical scores (tested).
     */
   final class TooBigForDriver extends RuntimeException
   type DScores = (scala.collection.Map[Long, Double], Double)
@@ -360,8 +256,8 @@ final class SparkSearchEngine(
     rows
   }
 
-  /** The per-phrase positional-fold frame (docId, doc_len, tf) — shared by
-    * the distributed per-query fetch below and Algebra.phraseScore's shape. */
+  /** The per-phrase positional-fold rows (docId, tf, doc_len) for the
+    * per-query driver fetch. */
   private def phraseTfRows(stems: Vector[String]): Array[(Long, Int, Int)] = {
     val base = postings.filter($"term".isin(stems.distinct: _*))
     val rows = headDocFilter(Seq(stems.head), stems).fold(base)(base.filter)
@@ -423,10 +319,9 @@ final class SparkSearchEngine(
     } catch { case _: TooBigForDriver => None }
 
   /** Dense ONE-SHUFFLE evaluator for arbitrary boolean/mixed queries — the
-    * beyond-driver-sized path (round-3/4 carried item). The `Scores`
-    * algebra pays a full_outer shuffle join per operator plus a cache and
-    * a max-aggregate per op; at 10^7+ docs with head-stem operands the
-    * join cascade dominates. Here the whole query costs:
+    * beyond-driver-sized path. A per-operator evaluation would pay a
+    * full_outer shuffle join per operator (measured 3–4.3× slower at 10M
+    * turns, BASELINE.md); here the whole query costs:
     *   1. ONE pruned postings scan per atom shape (bare terms; phrase
     *      stems with the head-stem Bloom prefilter) feeding ONE docId
     *      shuffle that aligns every atom's (tf, doc_len) per doc — every
@@ -437,7 +332,7 @@ final class SparkSearchEngine(
     *   3. one no-shuffle map computing the final per-doc score with the
     *      SAME scalar arithmetic as `DriverScalarAlgebra` (DenseEval
     *      replicates its IEEE operation order exactly), then the top-k.
-    * Results are bit-identical to the driver and distributed algebras
+    * Results are bit-identical to the driver path and equal `RefOracle`
     * (EngineSpec asserts all paths equal). */
   def topKDense(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] = {
     import graft.query.DenseEval
@@ -599,31 +494,9 @@ final class SparkSearchEngine(
     } finally { aligned.unpersist(false); () }
   }
 
-  /** Top-k (score desc, docId asc) after the accuracy filter
-    * (BM25Ranker.cpp:40-42 + our defined tiebreak, SURVEY.md §7). Densifies
-    * against the doc dictionary only when absent docs can still qualify. */
-  def topK(s: Scores, accuracy: Double, k: Int): Vector[(Long, Double)] = try {
-    val sparseTop = s.df
-      .filter($"score" >= accuracy)
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
-      .as[(Long, Double)].collect().toVector
-    val defaultQualifies = s.default >= accuracy
-    val needFill = defaultQualifies &&
-      (sparseTop.length < k || sparseTop.last._2 <= s.default)
-    if (!needFill) sparseTop
-    else {
-      val absent = dict.select($"docId")
-        .join(s.df.select($"docId"), Seq("docId"), "left_anti")
-        .orderBy($"docId".asc).limit(k)
-        .as[Long].collect().toVector.map(d => (d, s.default))
-      (sparseTop ++ absent).sortBy { case (d, sc) => (-sc, d) }.take(k)
-    }
-  } finally releaseCaches()
-
   /** Block-max WAND top-k for a single bare term — rank- and
-    * score-identical to the exhaustive path (same IEEE operation order;
-    * the normalization max IS the top-1 score), but reads the compressed
+    * score-identical to the driver and dense paths (same IEEE operation
+    * order; the normalization max IS the top-1 score), but reads the compressed
     * block index and stops decoding once a block's upper bound can no
     * longer enter the top-k. The 10^12-doc fast path for the most common
     * query shape. */
@@ -659,7 +532,7 @@ final class SparkSearchEngine(
     val normed = if (mx > 0) raw.map { case (d, s) => (d, s / mx) } else raw
     // single-operand stackCombine (ProcessQuery :152-154,183-203): the
     // final score is TFW·normalize(x) + EMW·x — not an IEEE no-op, so it
-    // must be applied here too for bit-identity with the algebra path
+    // must be applied here too for bit-identity with the driver path
     val tfw = params.termFrequencyWeight; val emw = params.exactMatchWeight
     val combined = normed.map { case (d, s) => (d, tfw * s + emw * s) }
     val filtered = combined.filter(_._2 >= accuracy)
@@ -684,9 +557,8 @@ final class SparkSearchEngine(
 
   /** Route a query along the cheapest exact path: single bare term → WAND
     * over the block index; driver-sized operands → distributed fetch +
-    * driver algebra; otherwise the dense one-shuffle evaluator (which
-    * replaced the per-operator join cascade as the beyond-driver-sized
-    * fallback). All paths are bit-identical (tested). */
+    * driver algebra; otherwise the dense one-shuffle evaluator. All paths
+    * are bit-identical (tested). */
   def topKAuto(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] =
     asSingleTerm(query) match {
       case Some(t) => termTopKWand(t, accuracy, k)

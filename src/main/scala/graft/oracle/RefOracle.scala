@@ -60,21 +60,22 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
     idf * tfPart
   }
 
-  object Algebra extends ScoreAlgebra[Scores] {
+  /** The reference's dense score-map algebra (every doc holds a score). */
+  object DenseAlgebra extends ScoreAlgebra[Scores] {
     override def empty: Scores = docLens.map { case (d, _) => d -> 0.0 }
 
     override def termScore(rawTerm: String): Scores = {
       val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
       val postings = index.getOrElse(key, Map.empty)
       var maximum = 0.0
-      val scores = mutable.Map.empty[Long, Double] ++ empty
+      val byDoc = mutable.Map.empty[Long, Double] ++ empty
       postings.foreach { case (docId, positions) =>
         val s = calculateBM25(positions.length.toDouble, docLens(docId).toDouble,
           postings.size.toDouble)
         maximum = math.max(maximum, s)
-        scores(docId) = s
+        byDoc(docId) = s
       }
-      val out = if (maximum > 0) scores.map { case (d, s) => d -> s / maximum } else scores
+      val out = if (maximum > 0) byDoc.map { case (d, s) => d -> s / maximum } else byDoc
       out.toMap
     }
 
@@ -94,14 +95,14 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
           meta.collect { case (d, v) if v.nonEmpty => d -> v.length }
         }
       var maximum = 0.0
-      val scores = mutable.Map.empty[Long, Double] ++ empty
+      val byDoc = mutable.Map.empty[Long, Double] ++ empty
       documentsMap.foreach { case (docId, tf) =>
         val s = calculateBM25(tf.toDouble, docLens(docId).toDouble,
           documentsMap.size.toDouble)
         maximum = math.max(maximum, s)
-        scores(docId) = s
+        byDoc(docId) = s
       }
-      val out = if (maximum > 0) scores.map { case (d, s) => d -> s / maximum } else scores
+      val out = if (maximum > 0) byDoc.map { case (d, s) => d -> s / maximum } else byDoc
       out.toMap
     }
 
@@ -121,8 +122,7 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
 
   /** Full query: evaluate → accuracy filter → (score desc, docId asc) → k. */
   def search(query: String, accuracy: Double = 0.0, k: Int = 100): Vector[(Long, Double)] = {
-    val scores = QueryEvaluator.evaluate(query, Algebra, params)
-    scores.toVector
+    QueryEvaluator.evaluate(query, DenseAlgebra, params).toVector
       .filter(_._2 >= accuracy)
       .sortBy { case (d, s) => (-s, d) }
       .take(k)

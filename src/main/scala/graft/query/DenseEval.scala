@@ -6,9 +6,10 @@ import scala.collection.mutable
 /** The dense one-shuffle boolean evaluator's query-side machinery: an AST
   * capture of the reference algebra plus the per-document scalar kernel.
   *
-  * Motivation (round-3/4 carried item): the distributed `Scores` algebra
-  * pays one full_outer JOIN (a shuffle of operand-sized frames) per
-  * boolean operator plus a cached frame and a max aggregate per op — a
+  * Motivation (round-3/4 carried item): a per-operator distributed algebra
+  * (the join cascade this evaluator replaced) pays one full_outer JOIN (a
+  * shuffle of operand-sized frames) per boolean operator plus a cached
+  * frame and a max aggregate per op — a
   * query like `"a" AND "b" OR "c"` over head stems at 10^7+ docs is
   * join-cascade-bound. But the whole computation is a per-document scalar
   * expression once (a) every atom's rows are aligned per doc and (b) the

@@ -156,16 +156,18 @@ final class SearchEngineServer(
   /** Bulk hits as {"<query>":[{title,content,url,score},...],...} — the
     * per-hit shape of /search, grouped by query. */
   private def searchManyJson(queries: Seq[String], accuracy: Double): String = {
-    val rows: Seq[(String, Long, String, Int, Double, String)] = inputPath match {
+    val e = engine
+    // the engine outlives the request: release the phrase fold it cached
+    val rows: Seq[(String, Long, String, Int, Double, String)] = try inputPath match {
       case Some(p) =>
-        engine.searchManyWithSnippets(queries, spark.read.parquet(p), params.topK, accuracy)
+        e.searchManyWithSnippets(queries, spark.read.parquet(p), params.topK, accuracy)
           .select($"query", $"docId", $"conv_id", $"turn_idx", $"score", $"snippet")
           .as[(String, Long, String, Int, Double, String)].collect().toSeq
       case None =>
-        engine.searchMany(queries, params.topK, accuracy)
+        e.searchMany(queries, params.topK, accuracy)
           .as[(String, Long, String, Int, Double)].collect().toSeq
           .map { case (q, d, c, t, s) => (q, d, c, t, s, "") }
-    }
+    } finally e.releaseCaches()
     groupedHitsJson(queries, rows)
   }
 

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.api.SparkSearchEngine
 import graft.build.{IndexBuilder, Tables}
 import graft.corpus.TranscriptGen
+import graft.oracle.RefOracle
 import graft.store.ParquetTableIO
 
 /** Document deletion (IndexBuilder.deleteDocs): tombstones + exact df
@@ -69,13 +70,26 @@ class DeleteSpec extends AnyFunSuite {
     // IEEE double, so the avg is order-free)
     assert(eDel.stats == eRef.stats)
 
+    // every query: tombstoned ≡ rebuilt, and both equal the oracle over
+    // the survivors
+    val oracle = new RefOracle(survivors)
     queries.foreach { q =>
-      assert(keyed(eDel, ioDel, q) == keyed(eRef, ioRef, q), s"query $q")
+      val got = keyed(eDel, ioDel, q)
+      assert(got == keyed(eRef, ioRef, q), s"query $q")
+      val want = oracle.search(q, 0.0, 1000).map { case (d, s) =>
+        val t = oracle.docs(d.toInt)._2
+        ((t.conv_id, t.turn_idx), s)
+      }
+      val failures = EngineSpecFixture.oracleMismatches(s"oracle $q",
+        got.toSeq.sortBy(_._1), want.sortBy(_._1))
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
     // the WAND kernel path (block df minus delta + exact skip set) stays
-    // bit-identical to the exhaustive path ON the tombstoned engine
-    assert(eDel.termTopKWand("whale", 0.0, 50) ==
-      eDel.topK(eDel.scores("whale"), 0.0, 50))
+    // bit-identical to the driver path (anti-joined fetch) and the dense
+    // one-shuffle evaluator ON the tombstoned engine
+    val wand = eDel.termTopKWand("whale", 0.0, 50)
+    assert(wand == eDel.topKDriver("whale", 0.0, 50).get)
+    assert(wand == eDel.topKDense("whale", 0.0, 50))
     // the dense one-shuffle evaluator applies the tombstones too
     assert(eDel.topKDense(queries(2), 0.0, 1000) == eDel.topKAuto(queries(2), 0.0, 1000))
     // bulk path: per-query ≡ single-query on the tombstoned engine
@@ -115,7 +129,7 @@ class DeleteSpec extends AnyFunSuite {
     queries.foreach { q =>
       assert(keyed(eC, io, q) == before(q), s"query $q after compact")
     }
-    assert(eC.termTopKWand("whale", 0.0, 50) == eC.topK(eC.scores("whale"), 0.0, 50))
+    assert(eC.termTopKWand("whale", 0.0, 50) == eC.topKDriver("whale", 0.0, 50).get)
   }
 
   test("purged docIds are never reused by a later incremental append") {
@@ -143,8 +157,10 @@ class DeleteSpec extends AnyFunSuite {
     val capped = new SparkSearchEngine(spark, io,
       GraftParams(maxDeletedIdsInMemory = 2))
     intercept[IllegalStateException] { capped.termTopKWand("whale", 0.0, 10) }
-    // the exhaustive path does not need the driver-side skip set
-    assert(capped.topK(capped.scores("whale"), 0.0, 10).nonEmpty)
+    // the driver path does not need the skip set: its fetch reads through
+    // the tombstone anti-join, and answers what the uncapped WAND answers
+    assert(capped.topKDriver("whale", 0.0, 10) ==
+      Some(new SparkSearchEngine(spark, io).termTopKWand("whale", 0.0, 10)))
   }
 
   test("fresh full build clears stale tombstones and watermark") {

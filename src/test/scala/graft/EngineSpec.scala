@@ -35,6 +35,16 @@ object EngineSpecFixture {
   }
 
   val queries: Seq[(String, (String, Double))] = EngineQueries.all
+
+  /** The oracle rule: the same keys in the same order, and every score
+    * within 1e-9 relative of the oracle's. Returns one line per mismatch. */
+  def oracleMismatches[K](label: String, got: Seq[(K, Double)], want: Seq[(K, Double)]): Seq[String] =
+    if (got.map(_._1) != want.map(_._1)) Seq(s"$label: keys ${got.take(5)} vs ${want.take(5)}")
+    else got.zip(want).collect {
+      case ((gd, gs), (_, ws))
+        if (if (ws == 0.0) math.abs(gs) else math.abs(gs - ws) / math.abs(ws)) > 1e-9 =>
+        s"$label: score $gd $gs vs $ws"
+    }
 }
 
 class EngineSpec extends AnyFunSuite {
@@ -94,60 +104,63 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("algebra caches are released after top-k: no growth across queries") {
-    val (io, _) = built
-    val engine = new SparkSearchEngine(spark, io)
-    def persisted = spark.sparkContext.getPersistentRDDs.size
-    // warm once (lazy stats/postings), snapshot, then run repeatedly
-    engine.topK(engine.scores("(\"blue whale\" OR \"query engine\") NOT \"red fish\""), 0.0, 10)
-    val base = persisted
-    (1 to 15).foreach { _ =>
-      engine.topK(engine.scores("(\"blue whale\" OR \"query engine\") NOT \"red fish\""), 0.0, 10)
-      engine.topK(engine.scores("\"blue whale\" whale engine"), 0.0, 10)
-    }
-    assert(persisted <= base, s"cached RDDs grew across queries: $base -> $persisted")
-  }
-
   test("q01-q20: rank- and score-identical to the oracle") {
     val (io, oracle) = built
     val engine = new SparkSearchEngine(spark, io)
-    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    queries.sortBy(_._1).foreach { case (name, (q, accuracy)) =>
-      val want = oracle.search(q, accuracy, 100)
-      val got = engine.topK(engine.scores(q), accuracy, 100)
-      if (got.map(_._1) != want.map(_._1)) {
-        failures += s"$name '$q': docIds ${got.take(5)} vs ${want.take(5)}"
-      } else {
-        got.zip(want).foreach { case ((gd, gs), (wd, ws)) =>
-          val rel = if (ws == 0.0) math.abs(gs) else math.abs(gs - ws) / math.abs(ws)
-          if (rel > 1e-9) failures += s"$name '$q': score doc $gd $gs vs $ws"
-        }
-      }
+    // through topKAuto: the production route (WAND, driver or dense)
+    val failures = queries.sortBy(_._1).flatMap { case (name, (q, accuracy)) =>
+      oracleMismatches(s"$name '$q'", engine.topKAuto(q, accuracy, 100),
+        oracle.search(q, accuracy, 100))
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("driver-algebra path bit-identical to the distributed path on q01-q20") {
-    val (io, _) = built
+    val (io, oracle) = built
     val engine = new SparkSearchEngine(spark, io)
     val tiny = new SparkSearchEngine(spark, io,
       GraftParams(driverAlgebraMaxDocs = 2)) // forces TooBig fallback
     queries.foreach { case (name, (q, accuracy)) =>
-      val distributed = engine.topK(engine.scores(q), accuracy, 100)
       val driver = engine.topKDriver(q, accuracy, 100)
       assert(driver.isDefined, s"$name should fit the driver path")
-      assert(driver.get == distributed, s"$name '$q'")
+      val failures = oracleMismatches(s"$name '$q'", driver.get, oracle.search(q, accuracy, 100))
+      assert(failures.isEmpty, failures.mkString("\n"))
+      assert(driver.get == engine.topKDense(q, accuracy, 100), s"$name '$q' vs dense")
       // the too-big bailout must fall back, not fail
-      assert(tiny.topKAuto(q, accuracy, 100) == distributed, s"$name fallback")
+      assert(tiny.topKAuto(q, accuracy, 100) == driver.get, s"$name fallback")
     }
   }
 
-  test("dense one-shuffle path bit-identical to driver + distributed algebras on q01-q20") {
-    val (io, _) = built
+  test("driver-algebra gate boundary: cap = largest operand → driver, cap − 1 → dense") {
+    val (io, oracle) = built
+    val (a, b) = ("\"blue whale\"", "\"red fish\"")
+    val q = s"$a OR $b"
+    // the largest operand is the OR's key set: every doc either phrase matches
+    def matched(p: String) =
+      oracle.search(p, Double.MinPositiveValue, Int.MaxValue).map(_._1).toSet
+    val largest = (matched(a) ++ matched(b)).size
+    assert(largest > 1)
+    val want = oracle.search(q, 0.0, 100)
+    val atCap = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = largest))
+    val driver = atCap.topKDriver(q, 0.0, 100)
+    assert(driver.isDefined, s"$largest-doc operand must fit a $largest-doc cap")
+    assert(oracleMismatches("driver at cap", driver.get, want).isEmpty)
+    val below = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = largest - 1))
+    assert(below.topKDriver(q, 0.0, 100).isEmpty, s"$largest-doc operand must exceed the cap")
+    val auto = below.topKAuto(q, 0.0, 100)
+    assert(auto == below.topKDense(q, 0.0, 100))
+    assert(oracleMismatches("dense below cap", auto, want).isEmpty)
+    assert(auto == driver.get, "both sides of the gate must be bit-identical")
+  }
+
+  test("dense one-shuffle path bit-identical to driver + oracle on q01-q20") {
+    val (io, oracle) = built
     val engine = new SparkSearchEngine(spark, io)
     queries.foreach { case (name, (q, accuracy)) =>
-      val distributed = engine.topK(engine.scores(q), accuracy, 100)
-      assert(engine.topKDense(q, accuracy, 100) == distributed, s"$name '$q'")
+      val dense = engine.topKDense(q, accuracy, 100)
+      assert(dense == engine.topKDriver(q, accuracy, 100).get, s"$name '$q'")
+      val failures = oracleMismatches(s"$name '$q'", dense, oracle.search(q, accuracy, 100))
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
     // extra shapes: nonzero defaults (NOT), empty atoms, duplicate atoms,
     // several accuracies — the dense fill and normalization constants must
@@ -160,8 +173,10 @@ class EngineSpec extends AnyFunSuite {
       "\"zzz nothing\"",
       "\"blue whale\" \"blue whale\"")
     for (q <- extra; acc <- Seq(0.0, Double.MinPositiveValue, 0.4)) {
-      assert(engine.topKDense(q, acc, 50) == engine.topK(engine.scores(q), acc, 50),
-        s"'$q' at accuracy $acc")
+      val dense = engine.topKDense(q, acc, 50)
+      assert(dense == engine.topKDriver(q, acc, 50).get, s"'$q' at accuracy $acc")
+      val failures = oracleMismatches(s"'$q' at accuracy $acc", dense, oracle.search(q, acc, 50))
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
     // dense path leaves no cached frames behind
     def persisted = spark.sparkContext.getPersistentRDDs.size
@@ -173,20 +188,20 @@ class EngineSpec extends AnyFunSuite {
   test("WAND term top-k identical to the exhaustive path (all q terms + edge cases)") {
     val (io, oracle) = built
     val engine = new SparkSearchEngine(spark, io)
+    // the exhaustive path: the driver algebra scores every posting of the term
+    def exhaustive(t: String, acc: Double, k: Int) = engine.topKDriver(t, acc, k).get
     val terms = Seq("whale", "blue", "the", "run", "engin", "a", "zzzunknown", "dont")
     terms.foreach { t =>
-      val exhaustive = engine.topK(engine.scores(t), 0.0, 100)
       val wand = engine.termTopKWand(t, 0.0, 100)
-      assert(wand == exhaustive, s"term '$t': wand ${wand.take(3)} vs ${exhaustive.take(3)}")
-      val oracleTop = oracle.search(t, 0.0, 100)
-      assert(wand.map(_._1) == oracleTop.map(_._1), s"term '$t' vs oracle")
+      val ex = exhaustive(t, 0.0, 100)
+      assert(wand == ex, s"term '$t': wand ${wand.take(3)} vs ${ex.take(3)}")
+      val failures = oracleMismatches(s"term '$t'", wand, oracle.search(t, 0.0, 100))
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
     // accuracy threshold path
-    assert(engine.termTopKWand("whale", 0.5, 100) ==
-      engine.topK(engine.scores("whale"), 0.5, 100))
+    assert(engine.termTopKWand("whale", 0.5, 100) == exhaustive("whale", 0.5, 100))
     // small k triggers real pruning (blockSize=8 in this fixture)
-    assert(engine.termTopKWand("the", 0.0, 3) ==
-      engine.topK(engine.scores("the"), 0.0, 3))
+    assert(engine.termTopKWand("the", 0.0, 3) == exhaustive("the", 0.0, 3))
   }
 
   test("bulk multi-term search is bit-identical to the per-term WAND path") {
@@ -240,7 +255,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("phrase head-stem Bloom prefilter: forced path bit-identical on all phrase queries") {
-    val (io, _) = built
+    val (io, oracle) = built
     import spark.implicits._
     val engine = new SparkSearchEngine(spark, io)
     // the default gates (min corpus size, head-selectivity ratio) never
@@ -252,8 +267,9 @@ class EngineSpec extends AnyFunSuite {
     val phraseQueries = queries.filter(_._2._1.contains("\""))
     assert(phraseQueries.nonEmpty)
     phraseQueries.foreach { case (name, (q, acc)) =>
-      assert(forced.topK(forced.scores(q), acc, 100) ==
-        engine.topK(engine.scores(q), acc, 100), s"$name distributed")
+      val failures = oracleMismatches(s"$name forced", forced.topKAuto(q, acc, 100),
+        oracle.search(q, acc, 100))
+      assert(failures.isEmpty, failures.mkString("\n"))
       assert(forced.topKDriver(q, acc, 100) == engine.topKDriver(q, acc, 100),
         s"$name driver")
       assert(forced.topKDense(q, acc, 100) == engine.topKDense(q, acc, 100),
@@ -370,7 +386,8 @@ class EngineSpec extends AnyFunSuite {
     val e1 = new SparkSearchEngine(spark, io)
     val e2 = new SparkSearchEngine(spark, io2)
     queries.take(6).foreach { case (name, (q, acc)) =>
-      assert(e1.topK(e1.scores(q), acc, 50) == e2.topK(e2.scores(q), acc, 50), name)
+      assert(e1.topKAuto(q, acc, 50) == e2.topKAuto(q, acc, 50), name)
+      assert(e1.topKDense(q, acc, 50) == e2.topKDense(q, acc, 50), s"$name dense")
     }
   }
 
@@ -411,20 +428,6 @@ class EngineSpec extends AnyFunSuite {
       .as[(String, Long, Int, Int, Array[Byte])].collect()
       .map(r => (r._1, r._2, r._3, r._4, r._5.toSeq)).sortBy(r => (r._1, r._2)).toSeq
     assert(content(io3) == content(io))
-  }
-
-  test("plans: term lookup pushes down; top-k is TakeOrdered; scoring is codegen'd") {
-    val (io, _) = built
-    val engine = new SparkSearchEngine(spark, io)
-    val df = engine.scores("whale").df
-      .orderBy(org.apache.spark.sql.functions.col("score").desc).limit(10)
-    df.collect() // finalize the adaptive plan so codegen ids are visible
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(term), EqualTo(term,whale)]"),
-      s"term filter must reach the parquet scan:\n$plan")
-    assert(plan.contains("TakeOrderedAndProject"), "top-k must not global-sort")
-    assert(plan.contains("*("), "BM25 scoring must stay in whole-stage codegen")
-    assert(!plan.contains("positions_vb"), "term scoring must not read the positions column")
   }
 
   test("search returns snippets over top-k") {

@@ -18,15 +18,26 @@ class IncrementalSpec extends AnyFunSuite {
   import EngineSpecFixture.spark
 
   private val allTurns = TranscriptGen.generateLocal(30)
-  private def keyed(engine: SparkSearchEngine, io: ParquetTableIO, q: String) = {
+  private lazy val oracle = new RefOracle(allTurns)
+
+  /** top-k keyed by (conv_id, turn_idx), sorted by key — docIds relabel
+    * between incremental and full builds. */
+  private def keyedRaw(engine: SparkSearchEngine, io: ParquetTableIO, q: String, k: Int) = {
     import spark.implicits._
     val dict = io.read(Tables.DocDict)
       .as[(Long, String, Int, Int)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    engine.topK(engine.scores(q), 0.0, 200).map { case (d, s) =>
-      (dict(d), math.rint(s * 1e12) / 1e12)
-    }.toSet
+    engine.topKAuto(q, 0.0, k).map { case (d, s) => (dict(d), s) }.sortBy(_._1)
   }
+  private def keyed(engine: SparkSearchEngine, io: ParquetTableIO, q: String) =
+    keyedRaw(engine, io, q, 200).map { case (key, s) => (key, math.rint(s * 1e12) / 1e12) }.toSet
+
+  /** The oracle's top-k over the same corpus, keyed like `keyedRaw`. */
+  private def oracleKeyed(q: String, k: Int) =
+    oracle.search(q, 0.0, k).map { case (d, s) =>
+      val t = oracle.docs(d.toInt)._2
+      ((t.conv_id, t.turn_idx), s)
+    }.sortBy(_._1)
 
   test("three incremental batches equal one full build (up to docId relabeling)") {
     import spark.implicits._
@@ -55,9 +66,14 @@ class IncrementalSpec extends AnyFunSuite {
     val eFull = new SparkSearchEngine(spark, ioFull)
     Seq("whale", "\"blue whale\"", "the", "\"blue whale\" OR \"query engine\"").foreach { q =>
       assert(keyed(eInc, ioInc, q) == keyed(eFull, ioFull, q), s"query $q")
+      val failures = EngineSpecFixture.oracleMismatches(s"oracle $q",
+        keyedRaw(eInc, ioInc, q, 200), oracleKeyed(q, 200))
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
-    // WAND over multi-segment blocks
-    assert(eInc.termTopKWand("whale", 0.0, 50) == eInc.topK(eInc.scores("whale"), 0.0, 50))
+    // WAND over multi-segment blocks ≡ the driver and dense paths
+    val wand = eInc.termTopKWand("whale", 0.0, 50)
+    assert(wand == eInc.topKDriver("whale", 0.0, 50).get)
+    assert(wand == eInc.topKDense("whale", 0.0, 50))
   }
 
   test("crash repair: partial un-ledgered batch is cleaned and replayed exactly") {
@@ -156,7 +172,9 @@ class IncrementalSpec extends AnyFunSuite {
       query.processAllAvailable()
       assert(io.read(Tables.DocDict).count() == allTurns.size)
       val engine = new SparkSearchEngine(spark, io)
-      assert(engine.topK(engine.scores("whale"), 0.0, 10).nonEmpty)
+      val failures = EngineSpecFixture.oracleMismatches("streamed whale",
+        keyedRaw(engine, io, "whale", 200), oracleKeyed("whale", 200))
+      assert(failures.isEmpty, failures.mkString("\n"))
     } finally query.stop()
   }
 }

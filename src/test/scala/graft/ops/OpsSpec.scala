@@ -333,6 +333,29 @@ class OpsSpec extends AnyFunSuite {
     rm(new java.io.File(s"$idx2/version"))
     intercept[IllegalStateException](
       Similarity.pqTopKIndexed(spark, idx2, emb, q, 0L, 5))
+    // the refused read is not cached: the next probe reads the table again
+    assert(!Similarity.cachedDirs.contains(s"$idx2/version"))
+  }
+
+  test("probe-metadata cache: one entry per index directory across rebuilds") {
+    import spark.implicits._
+    val emb = spark.createDataset(clusteredVecs).toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("pq_cache").toString
+    val q = clusteredVecs.find(_._1 == 0L).get._2
+    def cachedForIdx = Similarity.cachedDirs.filter(_.startsWith(idx + "/"))
+    Similarity.buildPqIndex(spark, emb, idx)
+    val first = Similarity.pqTopKIndexed(spark, idx, emb, q, 0L, 5)
+      .as[(Long, Double)].collect().toSeq
+    val dirs = cachedForIdx
+    assert(dirs == Set(s"$idx/version", s"$idx/codebook"))
+    // rebuild the same directory twice: each rebuild changes the listing
+    // stamp, which replaces the entry instead of adding one beside it
+    (1 to 2).foreach { _ =>
+      Similarity.buildPqIndex(spark, emb, idx)
+      assert(Similarity.pqTopKIndexed(spark, idx, emb, q, 0L, 5)
+        .as[(Long, Double)].collect().toSeq == first)
+      assert(cachedForIdx == dirs)
+    }
   }
 
   test("incremental ANN appends: build-half + append-half ≡ build-all (PQ, IVF, LSH)") {

@@ -65,6 +65,18 @@ class ServerSpec extends AnyFunSuite {
     assert(get("/searchMany?queries=&accuracy=0.0").statusCode() == 404)
   }
 
+  test("searchMany phrase requests do not grow cached RDDs") {
+    post("/indexDocuments", """{"clear": 1}""")
+    // the engine lives across requests; each phrase fold it caches must be
+    // released once the request's rows are collected
+    val path = "/searchMany?queries=%22blue%20whale%22,%22red%20fish%22&accuracy=0.0"
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    assert(get(path).statusCode() == 200) // warm (lazy stats/postings)
+    val base = persisted
+    (1 to 5).foreach(_ => assert(get(path).statusCode() == 200))
+    assert(persisted <= base, s"cached RDDs grew across requests: $base -> $persisted")
+  }
+
   test("searchManyAuto evaluates boolean/mixed shapes searchMany rejects") {
     post("/indexDocuments", """{"clear": 1}""")
     // a bracketed boolean and a mixed query — both 404 on /searchMany,
