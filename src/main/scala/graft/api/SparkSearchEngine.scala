@@ -23,10 +23,13 @@ import graft.text.TextPipeline
   * bit-identical to each other and equal to `RefOracle` (EngineSpec):
   *   - a single bare term → block-max WAND over the compressed blocks
   *     (`termTopKWand`);
-  *   - operands up to `driverAlgebraMaxDocs` docs → one term-pruned
-  *     distributed fetch per atom + the scalar algebra on the driver
-  *     (`topKDriver`);
+  *   - operands up to `driverAlgebraMaxDocs` docs → one shared operand
+  *     fetch for the whole query (`fetchOperands`: one scan for its terms,
+  *     one docId shuffle for its phrases) + the scalar algebra on the
+  *     driver (`topKDriver`);
   *   - anything larger → the dense one-shuffle evaluator (`topKDense`).
+  * Every table is pinned once per engine, and no path pays a Spark job
+  * per atom: a query's job count does not grow with its atom count.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -55,6 +58,12 @@ final class SparkSearchEngine(
     deletes.fold(df)(d => df.join(broadcast(d), Seq("docId"), "left_anti"))
   private lazy val postings = minusDeleted(io.read(Tables.Postings))
   private lazy val dict = minusDeleted(io.read(Tables.DocDict))
+  /** Unfiltered: WAND skips tombstoned docs itself (`deletedFn`). */
+  private lazy val blocks = io.read(Tables.Blocks)
+  /** Per-term tombstone df deltas (term, delta) of each delete batch. */
+  private lazy val deletedTermDf: Option[DataFrame] =
+    if (deletes.isEmpty || !io.exists(Tables.DeletedTermDf)) None
+    else Some(io.read(Tables.DeletedTermDf))
 
   /** Exact deleted-id skip set for the WAND kernels (a Bloom filter's
     * false positive would drop a LIVE doc — unacceptable, unlike the
@@ -85,13 +94,30 @@ final class SparkSearchEngine(
       case None => _ => false
     }
 
-  /** Per-term tombstone df deltas (sum across delete batches) for the
-    * paths that derive df from block metadata instead of filtered rows. */
-  private def termDeltas(keys: Seq[String]): Map[String, Long] =
-    if (deletes.isEmpty || !io.exists(Tables.DeletedTermDf)) Map.empty
-    else io.read(Tables.DeletedTermDf).filter($"term".isin(keys: _*))
-      .groupBy($"term").agg(sum($"delta").as("d"))
-      .as[(String, Long)].collect().toMap
+  /** Live df per term from the block metadata in ONE job with no shuffle:
+    * each partition sums `n_docs` minus the tombstone deltas per term, and
+    * the driver adds the partial sums. Exact: it equals the term's row
+    * count in the tombstone-filtered postings. Terms absent from the
+    * index are absent from the map; no job runs for no terms. */
+  private def liveDf(terms: Seq[String]): Map[String, Long] =
+    if (terms.isEmpty) Map.empty
+    else {
+      val keys = terms.distinct
+      val counts = blocks.filter($"term".isin(keys: _*))
+        .select($"term", $"n_docs".cast("long"))
+      val signed = deletedTermDf.fold(counts)(d =>
+        counts.union(d.filter($"term".isin(keys: _*)).select($"term", -$"delta")))
+      signed.as[(String, Long)].mapPartitions(_.foldLeft(Map.empty[String, Long]) {
+        case (m, (t, c)) => m.updated(t, m.getOrElse(t, 0L) + c) }.iterator)
+        .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    }
+
+  /** The df-only BM25 factor on the driver, for every path. StrictMath:
+    * Catalyst's log (`idfCol`) is StrictMath.log; Math.log may differ. */
+  private def idfOf(dfCount: Double): Double = {
+    val n = stats.total_docs.toDouble
+    StrictMath.log(((n - dfCount) + 0.5) / (dfCount + 0.5) + 1.0)
+  }
 
   /** The df-only BM25 factor (Catalyst log = StrictMath.log, matching the
     * oracle and the WAND path). Strictly positive for every df ≤ N. */
@@ -108,8 +134,8 @@ final class SparkSearchEngine(
     (tfD * lit(params.k1 + 1)) / (tfD + lit(params.k1) * docNorm)
   }
 
-  /** Frames cached by bulk evaluation (the phrase fold of `searchMany`
-    * and `searchManyAuto`), released once the result is collected —
+  /** Frames cached by bulk evaluation (the phrase fold of `searchMany`),
+    * released once the result is collected —
     * without this a long-lived session leaks cached frames until LRU
     * eviction. The engine is single-query-at-a-time (like the reference's
     * server); concurrent evaluations would release each other's caches
@@ -119,9 +145,8 @@ final class SparkSearchEngine(
     liveCaches.synchronized { liveCaches += df; df }
 
   /** Unpersist every frame cached by evaluation since the last release.
-    * Called by `searchManyAuto` and by `searchMany` callers after
-    * collecting; safe to call any time (a held frame recomputes lazily if
-    * re-used). */
+    * Called by `searchMany` callers after collecting; safe to call any
+    * time (a held frame recomputes lazily if re-used). */
   def releaseCaches(): Unit = liveCaches.synchronized {
     liveCaches.foreach(_.unpersist(false)); liveCaches.clear()
   }
@@ -139,16 +164,15 @@ final class SparkSearchEngine(
     * falls from Σ df(all stems) to ≈ df(head) rows. False positives are
     * harmless (they fold to tf=0 and are filtered), so results are
     * bit-identical at any fpp; the filter is pure plan surgery, the fold
-    * is untouched. On corpora smaller than the minDf threshold the df
-    * lookup itself is skipped — zero extra jobs on the common path. */
-  private def headDocFilter(heads: Seq[String], allStems: Seq[String]): Option[Column] = {
-    if (stats.total_docs < params.phrasePrefilterMinDf) return None // no job
-    val dfByTerm = io.read(Tables.Blocks)
-      .filter($"term".isin(allStems.distinct: _*))
-      .groupBy($"term").agg(sum($"n_docs").as("df"))
-      .as[(String, Long)].collect().toMap
-    val dfHead = heads.distinct.map(dfByTerm.getOrElse(_, 0L)).sum
-    val dfAll = allStems.distinct.map(dfByTerm.getOrElse(_, 0L)).sum
+    * is untouched. On corpora smaller than the minDf threshold no df is
+    * read at all (`prefilterStems` is empty) — zero extra jobs on the
+    * common path; above it the caller reads the stems' df in the same
+    * `liveDf` job as its term atoms' df. */
+  private def headDocFilter(phrases: Seq[Vector[String]], df: Map[String, Long]): Option[Column] = {
+    if (stats.total_docs < params.phrasePrefilterMinDf) return None
+    val heads = phrases.map(_.head).distinct
+    val dfHead = heads.map(df.getOrElse(_, 0L)).sum
+    val dfAll = phrases.flatten.distinct.map(df.getOrElse(_, 0L)).sum
     // gate on what the filter SAVES (the Σdf shuffle) and on selectivity
     // (df(head)/Σdf) — NOT on df(head) being large: the canonical win is
     // a rare head against a stop-word-class tail stem, where df(head) is
@@ -164,6 +188,35 @@ final class SparkSearchEngine(
     }
   }
 
+  /** The stems whose df `headDocFilter` reads (none below its minimum). */
+  private def prefilterStems(phrases: Seq[Vector[String]]): Seq[String] =
+    if (stats.total_docs < params.phrasePrefilterMinDf) Nil else phrases.flatten.distinct
+
+  /** Every phrase's positional fold in ONE docId shuffle over the union
+    * of their stems' postings (head-stem Bloom-prefiltered when its gate
+    * passes): (phrase index, docId, tf, doc_len) per doc where the phrase
+    * has tf > 0. */
+  private def phraseFold(phrases: Seq[Vector[String]], df: Map[String, Long])
+      : Dataset[(Int, Long, Int, Int)] = {
+    val base = postings.filter($"term".isin(phrases.flatten.distinct: _*))
+    val bPhrases = spark.sparkContext.broadcast(phrases.toArray)
+    headDocFilter(phrases, df).fold(base)(base.filter)
+      .select($"docId", $"doc_len", $"term", $"positions_vb")
+      .groupBy($"docId")
+      .agg(first($"doc_len").as("doc_len"),
+        collect_list(struct($"term", $"positions_vb")).as("tp"))
+      .as[(Long, Int, Seq[(String, Array[Byte])])]
+      .flatMap { case (docId, dl, tp) =>
+        val termPos = tp.iterator.map { case (t, vb) =>
+          t -> graft.codec.VarByte.decodePositions(vb).toSeq
+        }.toMap
+        bPhrases.value.iterator.zipWithIndex.flatMap { case (stems, i) =>
+          val tf = PhraseMatch.phraseTf(stems, termPos)
+          if (tf > 0) Iterator.single((i, docId, tf, dl)) else Iterator.empty
+        }
+      }
+  }
+
   /** Driver-side algebra over sparse (map, default) vectors — operand
     * FETCH is a distributed term-pruned scan + fold (that's where 10^12
     * docs matter), but once an operand fits on the driver the boolean
@@ -174,24 +227,25 @@ final class SparkSearchEngine(
     */
   final class TooBigForDriver extends RuntimeException
   type DScores = (scala.collection.Map[Long, Double], Double)
+  private type Atom = graft.query.DenseEval.Atom
+  private type OperandRow = (Long, Int, Int) // (docId, tf, doc_len)
+  /** Prefetched operand rows per atom (`fetchOperands`); None marks an
+    * operand larger than `driverAlgebraMaxDocs`, whose rows are not
+    * fetched. An atom absent from the map has no rows. */
+  private type Operands = Map[Atom, Option[Array[OperandRow]]]
 
-  /** Scalar sparse-vector algebra with a PLUGGABLE operand fetch: the
-    * per-query path fetches each atom's rows with its own distributed
-    * scan; the bulk path (`searchManyAuto`) prefetches every atom of the
-    * whole batch in shared scans and hands the rows over from a map.
-    * Everything after fetch is the same code, so the two paths are
-    * bit-identical by construction. Fetchers throw TooBigForDriver when
-    * an operand exceeds `driverAlgebraMaxDocs`. */
-  private final class DriverScalarAlgebra(
-      fetchTermRows: String => Array[(Long, Int, Int)], // post-stem key → (docId, tf, doc_len)
-      fetchPhraseRows: Vector[String] => Array[(Long, Int, Int)])
-    extends ScoreAlgebra[DScores] {
+  /** Scalar sparse-vector algebra over prefetched operands: the
+    * per-query path (`topKDriver`) prefetches one query's atoms, the bulk
+    * path (`searchManyAuto`) every atom of the whole batch, with the same
+    * `fetchOperands`. Everything after the fetch is the same code, so the
+    * two paths are bit-identical by construction. Throws TooBigForDriver
+    * when an operand exceeds `driverAlgebraMaxDocs`. */
+  private final class DriverScalarAlgebra(ops: Operands) extends ScoreAlgebra[DScores] {
 
     private val limit = params.driverAlgebraMaxDocs
 
     private def bm25(tf: Double, dl: Double, dfCount: Double): Double = {
-      val n = stats.total_docs.toDouble
-      val idf = StrictMath.log(((n - dfCount) + 0.5) / (dfCount + 0.5) + 1.0)
+      val idf = idfOf(dfCount)
       val docNorm = (1 - params.b) + params.b * (dl / stats.avg_doc_len)
       idf * ((tf * (params.k1 + 1)) / (tf + params.k1 * docNorm))
     }
@@ -212,15 +266,15 @@ final class SparkSearchEngine(
 
     override def empty: DScores = (Map.empty[Long, Double], 0.0)
 
-    override def termScore(rawTerm: String): DScores = {
-      val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
-      scoreRows(fetchTermRows(key))
-    }
+    private def fetch(a: Atom): Array[OperandRow] =
+      ops.getOrElse(a, Some(Array.empty[OperandRow])).getOrElse(throw new TooBigForDriver)
+
+    override def termScore(rawTerm: String): DScores =
+      scoreRows(fetch(Left(if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm)))
 
     override def phraseScore(phraseText: String): DScores = {
       val stems = TextPipeline.tokenizeQuery(phraseText)
-      if (stems.isEmpty) return empty
-      scoreRows(fetchPhraseRows(stems))
+      if (stems.isEmpty) empty else scoreRows(fetch(Right(stems)))
     }
 
     override def not(a: DScores): DScores =
@@ -250,38 +304,77 @@ final class SparkSearchEngine(
     }
   }
 
-  private def fetchLimited(df: DataFrame): Array[(Long, Int, Int)] = {
-    val rows = df.limit(params.driverAlgebraMaxDocs + 1).as[(Long, Int, Int)].collect()
-    if (rows.length > params.driverAlgebraMaxDocs) throw new TooBigForDriver
-    rows
+  /** The atoms the evaluator asks the algebra for on `query`, as it keys
+    * them; a malformed query throws here, before any fetch. */
+  private def atomsOf(query: String): Seq[Atom] = {
+    val ast = new graft.query.DenseEval.AstAlgebra(params.stemBareTerms)
+    QueryEvaluator.evaluate(query, ast, params)
+    ast.atomList
   }
 
-  /** The per-phrase positional-fold rows (docId, tf, doc_len) for the
-    * per-query driver fetch. */
-  private def phraseTfRows(stems: Vector[String]): Array[(Long, Int, Int)] = {
-    val base = postings.filter($"term".isin(stems.distinct: _*))
-    val rows = headDocFilter(Seq(stems.head), stems).fold(base)(base.filter)
-      .select($"docId", $"doc_len", $"term", $"positions_vb")
-    val tfs = rows
-      .groupBy($"docId")
-      .agg(first($"doc_len").as("doc_len"),
-        collect_list(struct($"term", $"positions_vb")).as("tp"))
-      .as[(Long, Int, Seq[(String, Array[Byte])])]
-      .map { case (docId, dl, tp) =>
-        val termPos = tp.iterator.map { case (t, vb) =>
-          t -> graft.codec.VarByte.decodePositions(vb).toSeq
-        }.toMap
-        (docId, dl, PhraseMatch.phraseTf(stems, termPos))
-      }.filter(_._3 > 0)
-      .toDF("docId", "doc_len", "tf")
-    fetchLimited(tfs.select($"docId", $"tf", $"doc_len"))
+  /** The operand rows of `atoms` in a fixed number of jobs, however many:
+    *   1. live df of the terms (and of the phrase stems, when the phrase
+    *      prefilter may engage) — one no-shuffle job (`liveDf`);
+    *   2. every term with 0 < df ≤ cap — one plain postings scan;
+    *   3. every phrase — one docId shuffle (`phraseFold`) collected under
+    *      the pigeonhole bound of phrases·cap rows; only past it (some
+    *      phrase exceeds the cap) a per-phrase count runs and the phrases
+    *      within the cap are fetched again.
+    * The driver holds at most cap rows per atom, +1 while collecting. */
+  private def fetchOperands(atoms: Seq[Atom]): Operands = {
+    val cap = params.driverAlgebraMaxDocs
+    val terms = atoms.collect { case Left(t) => t }.distinct
+    val phrases = atoms.collect { case Right(st) => st }.distinct
+    val df = liveDf(terms ++ prefilterStems(phrases))
+    val (fits, tooBig) = terms.filter(df.getOrElse(_, 0L) > 0).partition(df(_) <= cap)
+    val termOps: Operands = tooBig.map(t => (Left(t): Atom) -> None).toMap ++ (
+      if (fits.isEmpty) Map.empty
+      else postings.filter($"term".isin(fits: _*))
+        .select($"term", $"docId", $"tf", $"doc_len")
+        .as[(String, Long, Int, Int)].collect()
+        .groupBy(_._1).map { case (t, rs) => Left(t) -> Some(rs.map(r => (r._2, r._3, r._4))) })
+    if (phrases.isEmpty) termOps else termOps ++ fetchPhrases(phrases, df)
   }
 
-  /** Per-query driver algebra: one distributed scan per atom. */
-  private lazy val DriverAlgebra: ScoreAlgebra[DScores] = new DriverScalarAlgebra(
-    key => fetchLimited(postings.filter($"term" === key)
-      .select($"docId", $"tf", $"doc_len")),
-    stems => phraseTfRows(stems))
+  /** Step 3 of `fetchOperands`. */
+  private def fetchPhrases(phrases: Seq[Vector[String]], df: Map[String, Long]): Operands = {
+    val cap = params.driverAlgebraMaxDocs
+    val fold = phraseFold(phrases, df)
+    val bound = math.min(phrases.length.toLong * cap, Int.MaxValue - 1L).toInt
+    val first = collectAtMost(fold, bound + 1)
+    val (rows, counts) =
+      if (first.length <= bound) (first, first.groupBy(_._1).view.mapValues(_.length.toLong).toMap)
+      else {
+        val counts = fold.groupBy($"_1").count().as[(Int, Long)].collect().toMap
+        val fits = counts.collect { case (i, c) if c <= cap => i }.toSeq
+        (if (fits.isEmpty) Array.empty[(Int, Long, Int, Int)]
+        else fold.filter($"_1".isin(fits: _*)).collect(), counts)
+      }
+    val byPhrase = rows.groupBy(_._1)
+    phrases.zipWithIndex.map { case (p, i) =>
+      (Right(p): Atom) -> Option.when(counts.getOrElse(i, 0L) <= cap)(
+        byPhrase.getOrElse(i, Array.empty).map(r => (r._2, r._3, r._4)))
+    }.toMap
+  }
+
+  /** At most `n` rows of `ds` in ONE job: each task returns at most `n`
+    * rows and the driver keeps the first `n` it receives (a `limit(n)`
+    * collect scans one partition first, then scales up in further jobs). */
+  private def collectAtMost[T: scala.reflect.ClassTag](ds: Dataset[T], n: Int): Array[T] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[T]
+    spark.sparkContext.runJob(ds.rdd, (it: Iterator[T]) => it.take(n).toArray,
+      (_: Int, part: Array[T]) => buf ++= part.take(n - buf.length))
+    buf.toArray
+  }
+
+  /** The driver algebra over prefetched operands; None when one of the
+    * query's operands is too big for the driver. */
+  private def evalDriver(
+      query: String, ops: Operands, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] =
+    try {
+      val (m, default) = QueryEvaluator.evaluate(query, new DriverScalarAlgebra(ops), params)
+      Some(driverTopK(m, default, accuracy, k))
+    } catch { case _: TooBigForDriver => None }
 
   /** The top-k tail over a driver-side sparse vector: accuracy filter,
     * (score desc, docId asc) order, dense fill with absent docs when the
@@ -311,12 +404,10 @@ final class SparkSearchEngine(
     }
   }
 
-  /** Driver-algebra top-k; None when an operand is too big for the driver. */
+  /** Driver-algebra top-k: one shared fetch of the query's operands, then
+    * the scalar algebra; None when an operand is too big for the driver. */
   def topKDriver(query: String, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] =
-    try {
-      val (m, default) = QueryEvaluator.evaluate(query, DriverAlgebra, params)
-      Some(driverTopK(m, default, accuracy, k))
-    } catch { case _: TooBigForDriver => None }
+    evalDriver(query, fetchOperands(atomsOf(query)), accuracy, k)
 
   /** Dense ONE-SHUFFLE evaluator for arbitrary boolean/mixed queries — the
     * beyond-driver-sized path. A per-operator evaluation would pay a
@@ -360,10 +451,9 @@ final class SparkSearchEngine(
     val stemRows: Option[Dataset[Row]] =
       if (phraseAtoms.isEmpty) None
       else {
-        val allStems = phraseAtoms.flatMap(_._1).distinct
-        val heads = phraseAtoms.map(_._1.head).distinct
-        val base = postings.filter($"term".isin(allStems: _*))
-        Some(headDocFilter(heads, allStems).fold(base)(base.filter)
+        val phrases = phraseAtoms.map(_._1)
+        val base = postings.filter($"term".isin(phrases.flatten.distinct: _*))
+        Some(headDocFilter(phrases, liveDf(prefilterStems(phrases))).fold(base)(base.filter)
           .select($"docId", $"doc_len", $"term", $"positions_vb")
           .as[(Long, Int, String, Array[Byte])]
           .map { case (d, dl, t, vb) => (d, dl, true, -1, 0, t, vb) })
@@ -424,9 +514,7 @@ final class SparkSearchEngine(
       // idf exactly as DriverScalarAlgebra.bm25; the atom's max score is
       // idf · maxTfPart — bitwise the driver's max-of-per-row-scores loop
       // (x → fl(idf·x) is monotone for idf > 0, attained at the argmax)
-      val idf = Array.tabulate(nAtoms) { i =>
-        StrictMath.log(((nDocs.toDouble - dfA(i).toDouble) + 0.5) / (dfA(i).toDouble + 0.5) + 1.0)
-      }
+      val idf = Array.tabulate(nAtoms)(i => idfOf(dfA(i).toDouble))
       val atomMax = Array.tabulate(nAtoms) { i =>
         val mxS = if (dfA(i) == 0) 0.0 else idf(i) * mxTf(i)
         if (dfA(i) >= nDocs) mxS else math.max(mxS, 0.0)
@@ -504,24 +592,15 @@ final class SparkSearchEngine(
     val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
     // df derived from the block metadata itself (term-pruned read): exact,
     // and — unlike the batch-only term_stats table — correct across
-    // incrementally appended segments
-    val dfArr = io.read(Tables.Blocks).filter($"term" === key)
-      .agg(sum($"n_docs")).as[Option[Long]].collect()
-    // block metadata counts tombstoned docs too — subtract the recorded
-    // per-term delta so idf matches a filtered-postings recount exactly
-    val dfLive = dfArr.headOption.flatten
-      .map(_ - termDeltas(Seq(key)).getOrElse(key, 0L)).filter(_ > 0L)
+    // incrementally appended segments and tombstones
+    val dfLive = liveDf(Seq(key)).get(key).filter(_ > 0L)
     val raw: Vector[(Long, Double)] =
       if (dfLive.isEmpty) Vector.empty
       else {
-        val dfCount = dfLive.get.toDouble
-        val n = stats.total_docs.toDouble
-        // StrictMath: Catalyst's log expression uses StrictMath.log, and
-        // Math.log may differ in the last ulp on some JITs
-        val idf = StrictMath.log(((n - dfCount) + 0.5) / (dfCount + 0.5) + 1.0)
+        val idf = idfOf(dfLive.get.toDouble)
         val p = params; val st = stats
         val delFn = deletedFn(deletedBroadcast)
-        val cands = io.read(Tables.Blocks).filter($"term" === key)
+        val cands = blocks.filter($"term" === key)
           .as[graft.model.IndexBlock]
           .mapPartitions(it =>
             Wand.topKForPartition(it, idf, k, p, st, delFn))
@@ -653,18 +732,19 @@ final class SparkSearchEngine(
 
   /** Bulk evaluation of ARBITRARY queries — boolean, NOT, brackets and
     * mixed term+phrase shapes included — with the distributed operand
-    * FETCH shared across the whole batch: ONE pruned postings scan for
-    * every bare-term atom of every query, and ONE docId shuffle (head-
-    * stem Bloom-prefiltered) folding every phrase atom of every query
-    * doc-locally. The boolean combine itself is per-query driver
-    * arithmetic over the prefetched sparse vectors (`DriverScalarAlgebra`
-    * — the same code the single-query driver path runs, so results are
-    * bit-identical to `topKAuto` by construction; EngineSpec asserts it).
-    * A query whose operand exceeds `driverAlgebraMaxDocs` falls back to
-    * its own `topKAuto` evaluation — correct, just unshared.
+    * FETCH shared across the whole batch: `fetchOperands` over every atom
+    * of every query, the same fetch `topKDriver` runs over one query's
+    * atoms (one live-df job, ONE pruned postings scan for every bare-term
+    * atom, ONE docId shuffle folding every phrase atom). The boolean
+    * combine itself is per-query driver arithmetic over the prefetched
+    * sparse vectors (`DriverScalarAlgebra` — the same code the
+    * single-query driver path runs, so results are bit-identical to
+    * `topKAuto` by construction; EngineSpec asserts it). A query whose
+    * operand exceeds `driverAlgebraMaxDocs` falls back to its own
+    * `topKAuto` evaluation — correct, just unshared.
     *
     * This is the filtering-pipeline shape: thousands of `"a" AND "b"`
-    * style queries pay atom-count scans, not query-count scans.
+    * style queries pay a fixed number of scans, not query-count scans.
     *
     * @return (query, docId, conv_id, turn_idx, score), k rows max per query
     */
@@ -674,87 +754,10 @@ final class SparkSearchEngine(
       accuracy: Double = 0.0): DataFrame = {
     require(queries.nonEmpty, "searchManyAuto needs at least one query")
     val qs = queries.distinct
-    val limit = params.driverAlgebraMaxDocs
-    def stemKey(t: String) = if (params.stemBareTerms) TextPipeline.term(t) else t
-    val lexed = qs.map(q => q -> QueryLexer.lex(q))
-    val allTermKeys = lexed.flatMap(_._2.collect {
-      case QueryLexer.QTerm(t) => stemKey(t)
-    }).distinct
-    val allPhrases = lexed.flatMap(_._2.collect {
-      case QueryLexer.QPhrase(p) => TextPipeline.tokenizeQuery(p)
-    }).distinct.filter(_.nonEmpty)
-
-    // ---- shared term fetch: size gate, then ONE pruned scan ------------
-    val termCounts: Map[String, Long] =
-      if (allTermKeys.isEmpty) Map.empty
-      else postings.filter($"term".isin(allTermKeys: _*))
-        .groupBy($"term").agg(count(lit(1)).as("c"))
-        .as[(String, Long)].collect().toMap
-    val oversizedTerms = termCounts.collect { case (t, c) if c > limit => t }.toSet
-    val okTerms = allTermKeys.filterNot(oversizedTerms)
-    val termRows: Map[String, Array[(Long, Int, Int)]] =
-      if (okTerms.isEmpty) Map.empty
-      else postings.filter($"term".isin(okTerms: _*))
-        .select($"term", $"docId", $"tf", $"doc_len")
-        .as[(String, Long, Int, Int)].collect()
-        .groupBy(_._1).map { case (t, rs) => t -> rs.map(r => (r._2, r._3, r._4)) }
-
-    // ---- shared phrase fetch: one shuffle, per-phrase doc-local fold ---
-    var oversizedPhrases = Set.empty[Vector[String]]
-    val phraseRows: Map[Vector[String], Array[(Long, Int, Int)]] =
-      if (allPhrases.isEmpty) Map.empty
-      else {
-        val allStems = allPhrases.flatten.distinct
-        val heads = allPhrases.map(_.head).distinct
-        val base = postings.filter($"term".isin(allStems: _*))
-        val perDoc = headDocFilter(heads, allStems).fold(base)(base.filter)
-          .select($"docId", $"doc_len", $"term", $"positions_vb")
-          .groupBy($"docId")
-          .agg(first($"doc_len").as("doc_len"),
-            collect_list(struct($"term", $"positions_vb")).as("tp"))
-          .as[(Long, Int, Seq[(String, Array[Byte])])]
-        val bPhrases = spark.sparkContext.broadcast(allPhrases.zipWithIndex.toArray)
-        val folded = track(perDoc.flatMap { case (docId, dl, tp) =>
-          val termPos = tp.iterator.map { case (t, vb) =>
-            t -> graft.codec.VarByte.decodePositions(vb).toSeq
-          }.toMap
-          bPhrases.value.iterator.flatMap { case (stems, i) =>
-            val tf = PhraseMatch.phraseTf(stems, termPos)
-            if (tf > 0) Iterator.single((i, docId, tf, dl)) else Iterator.empty
-          }
-        }.toDF("pidx", "docId", "tf", "doc_len").cache())
-        val counts = folded.groupBy($"pidx").agg(count(lit(1)).as("c"))
-          .as[(Int, Long)].collect().toMap
-        oversizedPhrases = counts.collect {
-          case (i, c) if c > limit => allPhrases(i)
-        }.toSet
-        val okIdx = counts.collect { case (i, c) if c <= limit => i }.toSeq
-        if (okIdx.isEmpty) Map.empty
-        else folded.filter($"pidx".isin(okIdx: _*))
-          .as[(Int, Long, Int, Int)].collect()
-          .groupBy(_._1)
-          .map { case (i, rs) => allPhrases(i) -> rs.map(r => (r._2, r._3, r._4)) }
-      }
-
-    // ---- per-query combine: pure arithmetic over the prefetched atoms --
-    val bulkAlg: ScoreAlgebra[DScores] = new DriverScalarAlgebra(
-      key =>
-        if (oversizedTerms(key)) throw new TooBigForDriver
-        else termRows.getOrElse(key, Array.empty),
-      stems =>
-        if (oversizedPhrases(stems)) throw new TooBigForDriver
-        else phraseRows.getOrElse(stems, Array.empty))
-    val perQuery = qs.map { q =>
-      val top =
-        try {
-          val (m, default) = QueryEvaluator.evaluate(q, bulkAlg, params)
-          driverTopK(m, default, accuracy, k)
-        } catch { case _: TooBigForDriver => topKAuto(q, accuracy, k) }
-      q -> top
-    }
-    releaseCaches()
-    val rows = perQuery.flatMap { case (q, top) =>
-      top.map { case (d, s) => (q, d, s) }
+    val ops = fetchOperands(qs.flatMap(atomsOf).distinct)
+    val rows = qs.flatMap { q =>
+      evalDriver(q, ops, accuracy, k).getOrElse(topKAuto(q, accuracy, k))
+        .map { case (d, s) => (q, d, s) }
     }
     spark.createDataset(rows).toDF("query", "docId", "score")
       .join(dict, Seq("docId"))
@@ -769,23 +772,15 @@ final class SparkSearchEngine(
     * WAND path skips (full-scoring 64 head terms at 10M docs measured
     * SLOWER than 64 WAND round-trips — pruning, not just batching, is
     * what scales). Per-term df comes from the block metadata in one
-    * batched aggregate, like termTopKWand's per-term lookup. */
+    * no-shuffle job (`liveDf`), like termTopKWand's per-term lookup. */
   private def termAtomFrame(keyed: Seq[(String, String)], k: Int): DataFrame = {
     val keys = keyed.map(_._2).distinct
-    val blocks = io.read(Tables.Blocks).filter($"term".isin(keys: _*))
-    val n = stats.total_docs.toDouble
-    val deltas = termDeltas(keys)
-    val idfByTerm = blocks.groupBy($"term").agg(sum($"n_docs").as("df"))
-      .as[(String, Long)].collect()
-      .map { case (t, dfRaw) =>
-        val df = dfRaw - deltas.getOrElse(t, 0L)
-        t -> StrictMath.log(((n - df) + 0.5) / (df + 0.5) + 1.0)
-      }.toMap
+    val idfByTerm = liveDf(keys).map { case (t, df) => t -> idfOf(df.toDouble) }
     val p = params; val st = stats
     val bIdf = spark.sparkContext.broadcast(idfByTerm)
     val delFn = deletedFn(deletedBroadcast)
     val qdf = spark.createDataset(keyed).toDF("query", "term")
-    blocks.as[graft.model.IndexBlock]
+    blocks.filter($"term".isin(keys: _*)).as[graft.model.IndexBlock]
       .mapPartitions(it =>
         Wand.topKForPartitionMulti(it, bIdf.value, k, p, st, delFn))
       .toDF("term", "docId", "s")
@@ -800,27 +795,11 @@ final class SparkSearchEngine(
     * exists for phrase tf, so phrases score exhaustively (as the
     * single-query path does). */
   private def phraseAtomFrame(phraseAtoms: Seq[(String, Vector[String])]): DataFrame = {
-    val allStems = phraseAtoms.flatMap(_._2).distinct
-    // a doc is a candidate iff it contains SOME phrase's head stem (each
-    // phrase's fold returns 0 without its own head — see headDocFilter)
-    val heads = phraseAtoms.map(_._2.head).distinct
-    val base = postings.filter($"term".isin(allStems: _*))
-    val perDoc = headDocFilter(heads, allStems).fold(base)(base.filter)
-      .select($"docId", $"doc_len", $"term", $"positions_vb")
-      .groupBy($"docId")
-      .agg(first($"doc_len").as("doc_len"),
-        collect_list(struct($"term", $"positions_vb")).as("tp"))
-      .as[(Long, Int, Seq[(String, Array[Byte])])]
-    val bAtoms = spark.sparkContext.broadcast(phraseAtoms)
-    val fF = perDoc.flatMap { case (docId, dl, tp) =>
-      val termPos = tp.iterator.map { case (t, vb) =>
-        t -> graft.codec.VarByte.decodePositions(vb).toSeq
-      }.toMap
-      bAtoms.value.iterator.flatMap { case (q, stems) =>
-        val tf = PhraseMatch.phraseTf(stems, termPos)
-        if (tf > 0) Iterator.single((q, docId, tf, dl)) else Iterator.empty
-      }
-    }.toDF("query", "docId", "tf", "doc_len")
+    val phrases = phraseAtoms.map(_._2)
+    val bQueries = spark.sparkContext.broadcast(phraseAtoms.map(_._1).toArray)
+    val fF = phraseFold(phrases, liveDf(prefilterStems(phrases)))
+      .map { case (i, docId, tf, dl) => (bQueries.value(i), docId, tf, dl) }
+      .toDF("query", "docId", "tf", "doc_len")
       .select($"query", $"docId", tfPartCol($"tf", $"doc_len").as("f"))
     // cached so the postings decode + positional fold runs ONE job: the
     // broadcast df aggregate populates the cache, the join then reads it

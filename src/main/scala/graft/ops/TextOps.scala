@@ -194,12 +194,13 @@ object TextOps {
     // payloads" — here: shuffle nothing), and replaces the interpreted
     // gram `transform` with a char-scan kernel. Counts are identical:
     // per-doc DISTINCT grams probed against the distinct benchmark grams.
+    // deduplicated per partition (no shuffle): the driver receives each
+    // partition's distinct grams, not every doc's
     val grams = benchmark.select(col("text")).as[String]
       .mapPartitions { it =>
-        it.flatMap { t =>
-          import scala.jdk.CollectionConverters._
-          TextKernel.distinctGrams(t, n).asScala
-        }
+        val part = new java.util.HashSet[String]()
+        it.foreach(t => part.addAll(TextKernel.distinctGrams(t, n)))
+        scala.jdk.CollectionConverters.IteratorHasAsScala(part.iterator).asScala
       }.collect()
     val set = new java.util.HashSet[String](math.max(grams.length * 2, 16))
     grams.foreach(set.add)

@@ -1,7 +1,7 @@
 package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftParams
 import graft.api.SparkSearchEngine
 import graft.build.{IndexBuilder, Tables}
@@ -46,7 +46,21 @@ final class SearchEngineServer(
 
   @volatile private var params = GraftParams()
   private def io = new ParquetTableIO(spark, warehouse)
-  @volatile private var engine = new SparkSearchEngine(spark, io, params)
+  /** Source tables `/crawl` ingested since the last clearing rebuild: their
+    * turns carry the text of the hits they indexed, like `--input`'s. */
+  @volatile private var crawled = Vector.empty[String]
+
+  /** What the routes serve: one engine and the turns its hits join for
+    * text (`--input` plus the crawled tables), resolved together, so no
+    * request pays a table resolution (a parquet schema-inference job). */
+  private final class Serving {
+    val engine = new SparkSearchEngine(spark, io, params)
+    val turns: Option[DataFrame] =
+      inputPath.map(p => spark.read.parquet((p +: crawled).distinct: _*))
+  }
+  @volatile private var serving = new Serving
+  /** After every write and every ranker change. */
+  private def reopen(): Unit = serving = new Serving
 
   // ---- minimal flat-JSON helpers (fields are numbers/bools/strings/
   // string arrays — the reference's bodies are exactly this shape) -------
@@ -124,10 +138,11 @@ final class SearchEngineServer(
       paths.foreach { p =>
         val t = limit.map(n => turnsFrom(p).limit(n)).getOrElse(turnsFrom(p))
         new IndexBuilder(spark, io).buildIncremental(t, batch)
+        crawled = crawled :+ p
         batch += 1
       }
       batch
-    } finally spark.sparkContext.clearJobGroup()
+    } finally { spark.sparkContext.clearJobGroup(); reopen() }
   }
 
   private def buildIndex(clear: Boolean): Unit = {
@@ -135,13 +150,16 @@ final class SearchEngineServer(
     Cancellation.tag(spark.sparkContext, "graft-index")
     try new IndexBuilder(spark, io).build(turnsFrom(input), resume = !clear)
     finally spark.sparkContext.clearJobGroup()
+    if (clear) crawled = Vector.empty
+    reopen()
   }
 
   private def searchJson(query: String, accuracy: Double): String = {
-    val hits = inputPath match {
-      case Some(p) => engine.search(query, spark.read.parquet(p), accuracy)
+    val srv = serving
+    val hits = srv.turns match {
+      case Some(t) => srv.engine.search(query, t, accuracy)
       case None =>
-        engine.topKAuto(query, accuracy, params.topK).map { case (d, s) =>
+        srv.engine.topKAuto(query, accuracy, params.topK).map { case (d, s) =>
           graft.model.SearchHit(d, s"doc-$d", -1, s, "", "")
         }
     }
@@ -156,11 +174,12 @@ final class SearchEngineServer(
   /** Bulk hits as {"<query>":[{title,content,url,score},...],...} — the
     * per-hit shape of /search, grouped by query. */
   private def searchManyJson(queries: Seq[String], accuracy: Double): String = {
-    val e = engine
+    val srv = serving
+    val e = srv.engine
     // the engine outlives the request: release the phrase fold it cached
-    val rows: Seq[(String, Long, String, Int, Double, String)] = try inputPath match {
-      case Some(p) =>
-        e.searchManyWithSnippets(queries, spark.read.parquet(p), params.topK, accuracy)
+    val rows: Seq[(String, Long, String, Int, Double, String)] = try srv.turns match {
+      case Some(t) =>
+        e.searchManyWithSnippets(queries, t, params.topK, accuracy)
           .select($"query", $"docId", $"conv_id", $"turn_idx", $"score", $"snippet")
           .as[(String, Long, String, Int, Double, String)].collect().toSeq
       case None =>
@@ -176,7 +195,7 @@ final class SearchEngineServer(
     * across the batch, per-query results ≡ the /search evaluation. */
   private def searchManyAutoJson(queries: Seq[String], accuracy: Double): String =
     groupedHitsJson(queries,
-      engine.searchManyAuto(queries, params.topK, accuracy)
+      serving.engine.searchManyAuto(queries, params.topK, accuracy)
         .as[(String, Long, String, Int, Double)].collect().toSeq
         .map { case (q, d, c, t, s) => (q, d, c, t, s, "") })
 
@@ -302,7 +321,6 @@ final class SearchEngineServer(
       jsonField(body, "clear") match {
         case Some(v) =>
           buildIndex(unquote(v).toInt != 0)
-          engine = new SparkSearchEngine(spark, io, params)
           (200, "Successfully created Inverted Index")
         case None => (400, "Invalid JSON data")
       }
@@ -315,7 +333,6 @@ final class SearchEngineServer(
           // table-input engine: "crawl and index" = incremental-ingest the
           // sources (which indexes them); `clear` folds into batch resume
           ingest(jsonStringArray(urls), Some(unquote(n).toInt))
-          engine = new SparkSearchEngine(spark, io, params)
           (200, "Successfully crawled the pages and created Inverted Index")
         case _ => (400, "Invalid JSON data")
       }
@@ -339,7 +356,7 @@ final class SearchEngineServer(
             b.deleteDocs(ids, batchId)
             val compacted = jsonField(body, "compact").exists(v => unquote(v).toInt != 0)
             if (compacted) b.compact()
-            engine = new SparkSearchEngine(spark, io, params)
+            reopen()
             (200, s"Successfully deleted documents (batch $batchId" +
               (if (compacted) ", compacted)" else ")"))
           }
@@ -354,7 +371,7 @@ final class SearchEngineServer(
         case (Some(k1), Some(b), Some(pb), Some(emw)) =>
           params = params.copy(k1 = unquote(k1).toDouble, b = unquote(b).toDouble,
             phraseBoost = unquote(pb).toDouble, exactMatchWeight = unquote(emw).toDouble)
-          engine = new SparkSearchEngine(spark, io, params)
+          reopen()
           (200, "Successfully set new Ranker parameters")
         case _ => (404, "Invalid JSON data")
       }
@@ -380,9 +397,11 @@ final class SearchEngineServer(
     server.getAddress.getPort
   }
 
-  private def clearAll(): Unit =
+  private def clearAll(): Unit = {
     Seq(Tables.PostingsRaw, Tables.DocDict, Tables.Stats, Tables.TermStats,
       Tables.Postings, Tables.Blocks, Tables.Lineage).foreach(io.drop)
+    crawled = Vector.empty
+  }
 
   def stop(): Unit = {
     if (server != null) server.stop(0)

@@ -163,6 +163,20 @@ class DeleteSpec extends AnyFunSuite {
       Some(new SparkSearchEngine(spark, io).termTopKWand("whale", 0.0, 10)))
   }
 
+  test("driver term gate reads live df: raw block df > cap ≥ live df still fits") {
+    val (io, _, survivors, _) = tombstoned()
+    val t = "whale"
+    val raw = new RefOracle(allTurns).index(t).size
+    val live = new RefOracle(survivors).index(t).size
+    assert(raw > live, s"the tombstones must hit '$t'")
+    val want = new SparkSearchEngine(spark, io).termTopKWand(t, 0.0, 100)
+    val atLive = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = live))
+    assert(atLive.topKDriver(t, 0.0, 100) == Some(want),
+      s"block df $raw counts tombstoned docs; the live df $live fits the cap")
+    val below = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = live - 1))
+    assert(below.topKDriver(t, 0.0, 100).isEmpty)
+  }
+
   test("fresh full build clears stale tombstones and watermark") {
     import spark.implicits._
     val (io, b, _, _) = tombstoned()

@@ -6,6 +6,7 @@ import graft.api.SparkSearchEngine
 import graft.build.{IndexBuilder, Tables}
 import graft.corpus.TranscriptGen
 import graft.oracle.RefOracle
+import graft.query.QueryLexer
 import graft.store.ParquetTableIO
 
 /** End-to-end rank/score identity: the distributed engine vs the
@@ -151,6 +152,48 @@ class EngineSpec extends AnyFunSuite {
     assert(auto == below.topKDense(q, 0.0, 100))
     assert(oracleMismatches("dense below cap", auto, want).isEmpty)
     assert(auto == driver.get, "both sides of the gate must be bit-identical")
+  }
+
+  test("driver term gate boundary: largest live df = cap → driver, cap − 1 → dense") {
+    val (io, oracle) = built
+    // two bare terms whose doc sets nest, so the largest operand anywhere
+    // in the query's algebra is the larger term's df — the term gate, not
+    // a merge, decides the route
+    val docs = oracle.index.collect {
+      case (t, byDoc) if QueryLexer.lex(t) == Vector(QueryLexer.QTerm(t)) => t -> byDoc.keySet
+    }
+    val (a, b) = (for {
+      a <- docs.keys.toSeq.sorted
+      b <- docs.keys.toSeq.sorted
+      if docs(a).size > docs(b).size && docs(b).subsetOf(docs(a))
+    } yield (a, b)).maxBy { case (a, b) => (docs(a).size, docs(b).size) }
+    val q = s"$a $b"
+    val cap = docs(a).size
+    assert(cap > 1)
+    val want = oracle.search(q, 0.0, 100)
+    val atCap = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = cap))
+    val driver = atCap.topKDriver(q, 0.0, 100)
+    assert(driver.isDefined, s"'$q': a $cap-doc term must fit a $cap-doc cap")
+    assert(oracleMismatches("driver at cap", driver.get, want).isEmpty)
+    val below = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = cap - 1))
+    assert(below.topKDriver(q, 0.0, 100).isEmpty, s"'$q': a $cap-doc term must exceed the cap")
+    val auto = below.topKAuto(q, 0.0, 100)
+    assert(auto == below.topKDense(q, 0.0, 100))
+    assert(oracleMismatches("dense below cap", auto, want).isEmpty)
+    assert(auto == driver.get, "both sides of the gate must be bit-identical")
+  }
+
+  test("driver phrase gate reads the folded operand, not the head stem's df") {
+    val (io, oracle) = built
+    val p = "\"blue whale\""
+    val cap = oracle.search(p, Double.MinPositiveValue, Int.MaxValue).size
+    assert(oracle.index("blue").size > cap, "the head stem must be more frequent than the phrase")
+    val atCap = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = cap))
+    val driver = atCap.topKDriver(p, 0.0, 100)
+    assert(driver.isDefined, s"a $cap-doc phrase operand must fit a $cap-doc cap")
+    assert(oracleMismatches("phrase at cap", driver.get, oracle.search(p, 0.0, 100)).isEmpty)
+    val below = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = cap - 1))
+    assert(below.topKDriver(p, 0.0, 100).isEmpty)
   }
 
   test("dense one-shuffle path bit-identical to driver + oracle on q01-q20") {

@@ -938,6 +938,23 @@ class OpsSpec extends AnyFunSuite {
       s"no hash shuffle may remain (round-5 had the groupBy exchange):\n$plan")
   }
 
+  test("contamination: a benchmark slice duplicated ×3 gives identical counts") {
+    // the benchmark grams are deduplicated per partition before the
+    // collect: duplicate benchmark docs, in other partitions or in the
+    // same one, must not change any count
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val corpus = docs.filter(col("doc_id") % 50 =!= 7)
+    val bench = docs.filter(col("doc_id") % 50 === 7)
+    def counts(b: org.apache.spark.sql.DataFrame) =
+      TextOps.contamination(corpus, b, n = 4).as[(Long, Long)].collect().toSeq
+    val once = counts(bench)
+    assert(once.nonEmpty, "the slice must share some 4-grams with the corpus")
+    val thrice = bench.union(bench).union(bench)
+    assert(counts(thrice) == once)
+    assert(counts(thrice.repartition(1)) == once)
+  }
+
   test("repetition filter: hand-computed signals and verdicts") {
     import spark.implicits._
     val df = spark.createDataset(Seq(

@@ -117,6 +117,35 @@ class ServerSpec extends AnyFunSuite {
     assert(post("/crawl", """{"bad": 1}""").statusCode() == 400)
   }
 
+  test("crawl reopens the engine: a crawled batch is searchable at once") {
+    import spark.implicits._
+    post("/indexDocuments", """{"clear": 1}""")
+    assert(get("/search?query=whale&accuracy=0.0").statusCode() == 200) // engine in use
+    val base = spark.read.parquet(turnsPath).as[graft.model.Turn].collect().toSeq
+    val ts = base.head.ts
+    val extra = Seq(
+      graft.model.Turn("conv-crawl", 0, "user", "zyxcrawl whales near the blue zyxcrawl", "", ts),
+      graft.model.Turn("conv-crawl", 1, "assistant", "one zyxcrawl sighting", "", ts),
+      graft.model.Turn("conv-crawl", 2, "user", "nothing new here", "", ts))
+    val extraPath = java.nio.file.Files.createTempDirectory("srv_crawl_").toString + "/turns"
+    spark.createDataset(extra).write.parquet(extraPath)
+    val c = post("/crawl", s"""{"seedUrls": ["$extraPath"], "numberOfPages": ${extra.size}}""")
+    assert(c.statusCode() == 200, c.body())
+    val r = get("/search?query=zyxcrawl&accuracy=0.0")
+    assert(r.statusCode() == 200, r.body())
+    val hit = "\\{\"title\":\"([^\"#]+)#(\\d+)\".*?\"score\":([-+0-9.eE]+)\\}".r
+    val got = hit.findAllMatchIn(r.body())
+      .map(m => ((m.group(1), m.group(2).toInt), m.group(3).toDouble)).toVector
+    val oracle = new graft.oracle.RefOracle(base ++ extra)
+    val want = oracle.search("zyxcrawl", 0.0, 100).map { case (d, s) =>
+      val t = oracle.docs(d.toInt)._2
+      ((t.conv_id, t.turn_idx), s)
+    }
+    assert(got.take(2).map(_._1) == Vector(("conv-crawl", 0), ("conv-crawl", 1)), got.take(3))
+    val failures = graft.EngineSpecFixture.oracleMismatches("crawled", got, want)
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("deleteDocuments tombstones per-doc; compact purges without changing results") {
     post("/indexDocuments", """{"clear": 1}""")
     val r1 = get("/search?query=whale&accuracy=0.0")
